@@ -157,7 +157,7 @@ def encode_column_arrow(arr: pa.Array, codec: str, typ: str) -> tuple[bytes, dic
         if codec != "vec_plain":
             raise ValueError(f"codec {codec!r} not valid for type {typ!r}")
         # element counts with nulls as 0, then one flat float32 buffer —
-        # byte-identical to the pandas path (flatten drops null slots)
+        # byte-identical to the codecs.py reference (flatten drops null slots)
         lens = pc.fill_null(pc.list_value_length(arr), 0) \
             .to_numpy(zero_copy_only=False).astype(np.int64)
         codecs_mod._check_block_bytes(int(lens.sum()) * 4)
@@ -263,8 +263,9 @@ def _intra(reps: np.ndarray) -> np.ndarray:
 # ------------------------------------------------------------------ stats
 
 def column_stats_arrow(arr: pa.Array, typ: str, sample_max: int = 8192) -> dict:
-    """Arrow-side mirror of selector.column_stats (same fields, computed
-    from buffers; no per-value Python objects)."""
+    """Deterministic codec-selector stats (selector.select_codec input)
+    over a prefix sample of one column chunk, computed from buffers;
+    no per-value Python objects."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     s = arr.slice(0, min(len(arr), sample_max))
@@ -365,7 +366,7 @@ def _common_prefix_lens_arrays(buf: np.ndarray, offs: np.ndarray) -> np.ndarray:
 
 def _encode_segmented_arrow(arr: pa.Array, inner: str, typ: str) -> tuple[bytes, dict]:
     """Arrow twin of codecs.encode_segmented: same SEG_ROWS boundaries,
-    same inner encoders — byte-identical payloads to the pandas path."""
+    same inner encoders — byte-identical payloads to the codecs.py reference."""
     n = len(arr)
     parts: list[bytes] = []
     inner_metas: list[dict] = []

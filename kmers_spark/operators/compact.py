@@ -63,7 +63,6 @@ from .encode import (
     _blocks_path,
     _wave_name,
     _wave_rel,
-    make_encode_fn,
     make_encode_fn_arrow,
     sweep_orphan_waves,
 )
@@ -151,77 +150,6 @@ def _make_merge_fn_arrow(schema: dict[str, str], key: str,
     return fn
 
 
-def _make_merge_fn_pandas(schema: dict[str, str], key: str,
-                          overrides: dict[str, str] | None,
-                          sort_by: list[str] | None,
-                          wave_order: dict[str, int],
-                          gen_allow: dict[str, set] | None,
-                          bloom_dir: str | None,
-                          bloom_cols: list[str] | None,
-                          ndv_cols: list[str] | None):
-    """applyInPandas fallback of _make_merge_fn_arrow (same contract)."""
-    import pandas as pd
-
-    _BLOCK_COLS = ["bucket", "column", "codec", "n_rows",
-                   "raw_nbytes", "enc_nbytes", "payload", "meta"]
-
-    def fn(pdf: "pd.DataFrame"):
-        import numpy as np
-
-        from .. import codecs
-        from .decode import _wave_of
-
-        if not len(pdf):
-            return pd.DataFrame(columns=_BLOCK_COLS)
-        bucket_id = int(pdf["bucket"].iloc[0])
-        pdf = pdf.assign(_w=pdf["_gen"].map(_wave_of))
-        stray_w = set(pdf["_w"]) - set(wave_order)
-        if stray_w:
-            raise ValueError(
-                f"bucket {bucket_id}: block rows from waves {sorted(stray_w)} "
-                "not in the compaction's merge set (stray file?)"
-            )
-        parts: dict[str, list] = {c: [] for c in schema}
-        for w in sorted(set(pdf["_w"]), key=wave_order.__getitem__):
-            g = pdf[pdf["_w"] == w]
-            if g["column"].duplicated().any():
-                raise ValueError(
-                    f"bucket {bucket_id}: duplicate column rows in "
-                    f"generation {w!r} (corrupt wave dir)"
-                )
-            rows = {r["column"]: r for _, r in g.iterrows()}
-            allow = gen_allow.get(w, set()) if gen_allow else set()
-            stray = [c for c in rows if c not in schema]
-            absent = [c for c in schema if c not in rows and c not in allow]
-            if stray or absent:
-                raise ValueError(
-                    f"bucket {bucket_id} generation {w!r} is corrupt: "
-                    f"missing columns {absent}, stray columns {stray}"
-                )
-            n = json.loads(next(iter(rows.values()))["meta"])["n"]
-            for c, typ in schema.items():
-                if c in rows:
-                    s = codecs.decode_column(
-                        bytes(rows[c]["payload"]), json.loads(rows[c]["meta"])
-                    )
-                    if typ == "binary":
-                        s = s.map(lambda v: None if v is None else bytes(v))
-                else:
-                    s = pd.Series([None] * n, dtype=object) if typ in (
-                        "string", "binary", "float_array"
-                    ) else pd.Series(np.full(n, np.nan))
-                parts[c].append(s)
-        data = {c: pd.concat(v, ignore_index=True) for c, v in parts.items()}
-        out = pd.DataFrame(data)
-        out["bucket"] = bucket_id
-        return make_encode_fn(schema, key, overrides, sort_by,
-                              bloom_dir=bloom_dir,
-                              bloom_cols=bloom_cols,
-                              ndv_cols=ndv_cols)(out)
-
-    return fn
-
-
 def compact_stream(spark: SparkSession, out_dir: str, *,
                    keep_last: int = 0) -> dict:
     """Merge a streamed snapshot's committed generations (all but the
@@ -284,23 +212,13 @@ def compact_stream(spark: SparkSession, out_dir: str, *,
 
     new_dir = f"{_blocks_path(out_dir)}/{_wave_name()}"
     bloom_dir = _bloomkern.stage_dir(new_dir)
-    gb = blocks.groupBy("bucket")
-    if hasattr(gb, "applyInArrow"):
-        merged = gb.applyInArrow(
-            _make_merge_fn_arrow(schema_order, key_col, overrides, None,
-                                 wave_order, gen_allow, bloom_dir,
-                                 m.get("bloom_columns"),
-                                 m.get("ndv_columns")),
-            BLOCK_SCHEMA,
-        )
-    else:
-        merged = gb.applyInPandas(
-            _make_merge_fn_pandas(schema_order, key_col, overrides, None,
-                                  wave_order, gen_allow, bloom_dir,
-                                  m.get("bloom_columns"),
-                                  m.get("ndv_columns")),
-            BLOCK_SCHEMA,
-        )
+    merged = blocks.groupBy("bucket").applyInArrow(
+        _make_merge_fn_arrow(schema_order, key_col, overrides, None,
+                             wave_order, gen_allow, bloom_dir,
+                             m.get("bloom_columns"),
+                             m.get("ndv_columns")),
+        BLOCK_SCHEMA,
+    )
     (
         merged.repartition(F.col("bucket"))
         .write.mode("error")

@@ -11,10 +11,9 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .. import codecs, manifest
+from .. import manifest
 from ..kernels import bloom as bloomkern
 from .encode import assert_utc_session, committed_wave_paths
 
@@ -138,7 +137,7 @@ def decode_blocks_df(blocks: DataFrame, schema: dict[str, str], out_schema: str,
                      missing: dict[int, set] | None = None,
                      gen_key: str | None = None,
                      gen_missing: dict[str, set] | None = None) -> DataFrame:
-    """block rows -> original rows; Arrow path when available.
+    """block rows -> original rows through one applyInArrow kernel.
 
     `norm_filters` (zonemap.normalize_filters output) pushes the scan
     predicate INTO the decode kernel — late materialization: the filter
@@ -159,160 +158,91 @@ def decode_blocks_df(blocks: DataFrame, schema: dict[str, str], out_schema: str,
     `missing` at GENERATION granularity: the group's gen_key file path
     names its wave, and only columns the wave predates may null-fill —
     a post-evolution generation missing an evolved column raises."""
-    from .. import zonemap
+    import pyarrow as pa
+
+    from .. import arrowcodecs, zonemap
 
     cols = list(schema.keys())
     missing = missing or {}
     grouped = blocks.groupBy("bucket", gen_key) if gen_key \
         else blocks.groupBy("bucket")
 
-    if hasattr(grouped, "applyInArrow"):
-        import pyarrow as pa
-
-        from .. import arrowcodecs
-
-        def decode_group_arrow(table: "pa.Table") -> "pa.Table":
-            arrowcodecs.pin_worker_threads()
-            col_names = table.column("column").to_pylist()
-            if len(set(col_names)) != len(col_names):
-                raise ValueError(
-                    f"duplicate block rows for bucket "
-                    f"{table.column('bucket')[0].as_py()}: {sorted(col_names)} "
-                    "(stray rows from an uncommitted write, or a bucket that "
-                    "spanned partitions during encode_colocated)"
-                )
-            metas = table.column("meta").to_pylist()
-            payloads = table.column("payload")
-            idx = {cname: i for i, cname in enumerate(col_names)}
-            bucket_id = int(table.column("bucket")[0].as_py())
-            if gen_missing is not None and gen_key:
-                miss = gen_missing.get(
-                    _wave_of(table.column(gen_key)[0].as_py()), set()
-                )
-            else:
-                miss = missing.get(bucket_id, ())
-            absent = [c for c in cols if c not in idx and c not in miss]
-            stray = [c for c in idx if c not in schema]
-            if absent or stray:
-                raise ValueError(
-                    f"bucket {bucket_id} block set is corrupt: "
-                    f"missing columns {absent}, stray columns {stray} "
-                    "(split across partitions, or foreign rows in a wave dir)"
-                )
-            arrays: dict[str, pa.Array] = {}
-
-            def dec(cname: str) -> pa.Array:
-                if cname not in arrays:
-                    if cname in idx:
-                        i = idx[cname]
-                        arrays[cname] = arrowcodecs.decode_column_arrow(
-                            payloads[i].as_py(), json.loads(metas[i])
-                        )
-                    else:  # schema-evolved: null-fill at the bucket's
-                        # row count (any present block's meta carries n)
-                        n = json.loads(metas[next(iter(idx.values()))])["n"]
-                        arrays[cname] = pa.nulls(
-                            n, type=zonemap.arrow_type(schema[cname])
-                        )
-                return arrays[cname]
-
-            if norm_filters:
-                import pyarrow.compute as pc
-
-                mask = zonemap.arrow_mask(dec, norm_filters)
-                nsel = pc.sum(mask).as_py() or 0
-                if not nsel:
-                    return pa.table(
-                        {c: pa.array([], type=zonemap.arrow_type(schema[c]))
-                         for c in cols}
-                    )
-                # selected decode: seg: codecs skip whole segments with
-                # no selected row (page skipping); columns the mask
-                # already decoded just filter
-                sel = mask.to_numpy(zero_copy_only=False)
-                out: dict[str, pa.Array] = {}
-                for c in cols:
-                    if c in arrays:
-                        out[c] = arrays[c].filter(mask)
-                    elif c in idx:
-                        i = idx[c]
-                        out[c] = arrowcodecs.decode_column_arrow_selected(
-                            payloads[i].as_py(), json.loads(metas[i]), sel
-                        )
-                    else:  # schema-evolved: null-fill the selected rows
-                        out[c] = pa.nulls(
-                            nsel, type=zonemap.arrow_type(schema[c])
-                        )
-                return pa.table(out)
-            return pa.table({c: dec(c) for c in cols})
-
-        return grouped.applyInArrow(decode_group_arrow, out_schema)
-
-    def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["column"].duplicated().any():
+    def decode_group_arrow(table: "pa.Table") -> "pa.Table":
+        arrowcodecs.pin_worker_threads()
+        col_names = table.column("column").to_pylist()
+        if len(set(col_names)) != len(col_names):
             raise ValueError(
-                f"duplicate block rows for bucket {pdf['bucket'].iloc[0]}: "
-                f"{sorted(pdf['column'])}"
+                f"duplicate block rows for bucket "
+                f"{table.column('bucket')[0].as_py()}: {sorted(col_names)} "
+                "(stray rows from an uncommitted write, or a bucket that "
+                "spanned partitions during encode_colocated)"
             )
-        rows_by_col = {row["column"]: row for _, row in pdf.iterrows()}
-        bucket_id = int(pdf["bucket"].iloc[0])
+        metas = table.column("meta").to_pylist()
+        payloads = table.column("payload")
+        idx = {cname: i for i, cname in enumerate(col_names)}
+        bucket_id = int(table.column("bucket")[0].as_py())
         if gen_missing is not None and gen_key:
-            miss = gen_missing.get(_wave_of(pdf[gen_key].iloc[0]), set())
+            miss = gen_missing.get(
+                _wave_of(table.column(gen_key)[0].as_py()), set()
+            )
         else:
             miss = missing.get(bucket_id, ())
-        absent = [c for c in cols if c not in rows_by_col and c not in miss]
-        stray = [c for c in rows_by_col if c not in schema]
+        absent = [c for c in cols if c not in idx and c not in miss]
+        stray = [c for c in idx if c not in schema]
         if absent or stray:
             raise ValueError(
                 f"bucket {bucket_id} block set is corrupt: "
                 f"missing columns {absent}, stray columns {stray} "
                 "(split across partitions, or foreign rows in a wave dir)"
             )
-        series: dict[str, pd.Series] = {}
+        arrays: dict[str, pa.Array] = {}
 
-        def dec(cname: str) -> pd.Series:
-            if cname not in series:
-                if cname in rows_by_col:
-                    row = rows_by_col[cname]
-                    series[cname] = codecs.decode_column(
-                        bytes(row["payload"]), json.loads(row["meta"])
+        def dec(cname: str) -> pa.Array:
+            if cname not in arrays:
+                if cname in idx:
+                    i = idx[cname]
+                    arrays[cname] = arrowcodecs.decode_column_arrow(
+                        payloads[i].as_py(), json.loads(metas[i])
                     )
-                else:  # schema-evolved: null-fill
-                    n = json.loads(next(iter(rows_by_col.values()))["meta"])["n"]
-                    series[cname] = pd.Series([None] * n, dtype=object)
-            return series[cname]
+                else:  # schema-evolved: null-fill at the bucket's
+                    # row count (any present block's meta carries n)
+                    n = json.loads(metas[next(iter(idx.values()))])["n"]
+                    arrays[cname] = pa.nulls(
+                        n, type=zonemap.arrow_type(schema[cname])
+                    )
+            return arrays[cname]
 
         if norm_filters:
-            mask = zonemap.pandas_mask(dec, norm_filters, schema)
-            if not mask.any():
-                return pd.DataFrame(columns=cols)
-            data = {}
-            for c in cols:
-                if c in series:  # decoded for the mask: just filter
-                    s = series[c][mask].reset_index(drop=True)
-                elif c in rows_by_col:  # selected decode (segment skip)
-                    row = rows_by_col[c]
-                    s = codecs.decode_column_selected(
-                        bytes(row["payload"]), json.loads(row["meta"]), mask
-                    )
-                else:  # schema-evolved: null-fill selected rows
-                    s = pd.Series([None] * int(mask.sum()), dtype=object)
-                if schema[c] == "binary":
-                    s = s.map(lambda v: None if v is None else bytes(v))
-                data[c] = s
-            return pd.DataFrame(data, columns=cols)
-        n = len(dec(cols[0])) if cols else 0
-        data = {}
-        for c in cols:
-            s = dec(c)
-            if schema[c] == "binary":
-                s = s.map(lambda v: None if v is None else bytes(v))
-            data[c] = s.reset_index(drop=True)
-        if not n:
-            return pd.DataFrame(columns=cols)
-        return pd.DataFrame(data, columns=cols)
+            import pyarrow.compute as pc
 
-    return grouped.applyInPandas(decode_group, out_schema)
+            mask = zonemap.arrow_mask(dec, norm_filters)
+            nsel = pc.sum(mask).as_py() or 0
+            if not nsel:
+                return pa.table(
+                    {c: pa.array([], type=zonemap.arrow_type(schema[c]))
+                     for c in cols}
+                )
+            # selected decode: seg: codecs skip whole segments with
+            # no selected row (page skipping); columns the mask
+            # already decoded just filter
+            sel = mask.to_numpy(zero_copy_only=False)
+            out: dict[str, pa.Array] = {}
+            for c in cols:
+                if c in arrays:
+                    out[c] = arrays[c].filter(mask)
+                elif c in idx:
+                    i = idx[c]
+                    out[c] = arrowcodecs.decode_column_arrow_selected(
+                        payloads[i].as_py(), json.loads(metas[i]), sel
+                    )
+                else:  # schema-evolved: null-fill the selected rows
+                    out[c] = pa.nulls(
+                        nsel, type=zonemap.arrow_type(schema[c])
+                    )
+            return pa.table(out)
+        return pa.table({c: dec(c) for c in cols})
+
+    return grouped.applyInArrow(decode_group_arrow, out_schema)
 
 
 def scan_table(spark: SparkSession, out_dir: str, filters: list[tuple],

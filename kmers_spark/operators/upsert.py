@@ -332,13 +332,7 @@ def _upsert_rewrite(spark: SparkSession, out_dir: str, m: dict,
                                bloom_dir=bloom_dir,
                                bloom_cols=m.get("bloom_columns"),
                                ndv_cols=m.get("ndv_columns"))
-    if hasattr(cg, "applyInArrow"):
-        rewritten = cg.applyInArrow(fn, BLOCK_SCHEMA)
-    else:  # pandas-era Spark: route the rows through Arrow ourselves
-        raise NotImplementedError(
-            "upsert_table requires Spark with cogroup applyInArrow "
-            "(Spark >= 4.0)"
-        )
+    rewritten = cg.applyInArrow(fn, BLOCK_SCHEMA)
 
     out = rewritten if verbatim is None else rewritten.unionByName(verbatim)
     (

@@ -1,2 +1,3 @@
-"""Structured Streaming paths: micro-batch encode with exactly-once
-block commits via foreachBatch + the manifest's commit markers."""
+"""Structured Streaming paths: incremental decode of committed waves
+(decode_stream) and a stateful sessionizer (stateful). Streaming encode
+is the `writeStream.format("kmers")` sink in datasource.py."""

@@ -78,30 +78,12 @@ def _json_safe_pair(lo: Any, hi: Any, typ: str) -> tuple[Any, Any] | None:
     return int(lo), int(hi)  # int64 / timestamps as epoch-us
 
 
-def bounds_pandas(series, typ: str) -> tuple[Any, Any] | None:
+def bounds_arrow(arr, typ: str) -> tuple[Any, Any] | None:
     """(zmin, zmax) over non-null values, JSON-safe, or None.
 
     Nulls are excluded: comparison predicates are never satisfied by
-    NULL, so non-null bounds are sound for pruning them."""
-    if typ not in PRUNABLE:
-        return None
-    s = series.dropna()
-    if not len(s):
-        return None
-    if typ in ("timestamp", "timestamp_ntz"):
-        v = s.to_numpy(dtype="datetime64[us]").astype("int64")
-        return _json_safe_pair(v.min(), v.max(), "int64")
-    if typ == "double":
-        v = s.to_numpy(dtype="float64")
-        return _json_safe_pair(v.min(), v.max(), typ)
-    if typ == "int64":
-        v = s.to_numpy(dtype="int64")
-        return _json_safe_pair(v.min(), v.max(), typ)
-    return _json_safe_pair(min(s), max(s), typ)
-
-
-def bounds_arrow(arr, typ: str) -> tuple[Any, Any] | None:
-    """Arrow-native twin of bounds_pandas (no pandas materialization)."""
+    NULL, so non-null bounds are sound for pruning them. Arrow's min_max
+    also skips NaN, which no comparison matches either."""
     import pyarrow.compute as pc
 
     if typ not in PRUNABLE:
@@ -398,40 +380,6 @@ def _float_mask_arrow(arr, op: str, bv, pa, pc):
     if op == "<":
         return pc.and_(valid, pc.invert(isnan))
     return valid  # "<="
-
-
-def pandas_mask(get_col, norm: list[tuple], schema: dict[str, str]):
-    """numpy twin of arrow_mask for the pandas decode fallback path.
-
-    Known limitation (legacy path only — every Spark 4 deployment takes
-    the Arrow kernels): pandas conflates null and NaN in float columns,
-    so this mask cannot replicate Spark's NaN-is-greatest comparison
-    semantics for doubles; NaN rows filter like nulls here."""
-    import numpy as np
-
-    mask = None
-    for col, op, bv, _orig in norm:
-        s = get_col(col)
-        typ = schema[col]
-        valid = s.notna().to_numpy(dtype=bool)
-        m = np.zeros(len(s), dtype=bool)
-        if valid.any():
-            if typ in ("timestamp", "timestamp_ntz"):
-                v = s[valid].to_numpy(dtype="datetime64[us]").astype("int64")
-            else:
-                v = s[valid].to_numpy()
-            if op == "in":
-                hit = np.isin(v, np.array(list(bv), dtype=v.dtype)) if v.dtype.kind != "O" \
-                    else np.array([x in set(bv) for x in v], dtype=bool)
-            else:
-                import operator
-
-                fn = {"=": operator.eq, "<": operator.lt, "<=": operator.le,
-                      ">": operator.gt, ">=": operator.ge}[op]
-                hit = fn(v, bv)
-            m[valid] = np.asarray(hit, dtype=bool)
-        mask = m if mask is None else mask & m
-    return mask
 
 
 def prune_buckets(m: dict, filters: list[tuple],
